@@ -222,8 +222,10 @@ _ADJUDICATED_ROUND: dict[str, int] = {
 # touched. q162: pack_sequences_greedy gained the tokens_col hook
 # (q175); the default whitespace path is expression-identical but
 # the function was edited.
-# Changed since their last driver row (round-11 optimization edits).
-_STALE: tuple[str, ...] = ()
+# Changed since their last driver row: q109's dump parse now runs as
+# size-balanced file bins over spark.range (no path shuffle), with a
+# linear-time 7z chunk reader and a fixed-width timestamp parse.
+_STALE: tuple[str, ...] = ("q109",)
 
 
 def _priority_order(keys: list[str]) -> list[str]:

@@ -464,24 +464,30 @@ class SevenZipReader:
 
 
 class _ChunkStream(io.RawIOBase):
-    """File-like over an iterator of byte chunks (feeds ET.iterparse)."""
+    """File-like over an iterator of byte chunks (feeds ET.iterparse).
+
+    A decoded chunk can be many MB (one packed MB of XML inflates
+    several-fold) and is read back a few KB at a time, so reads advance
+    an offset into a memoryview: each byte is copied once, and a chunk
+    costs time linear in its size."""
 
     def __init__(self, it: Iterator[bytes]):
         self._it = it
-        self._buf = b""
+        self._buf = memoryview(b"")
+        self._pos = 0
 
     def readable(self) -> bool:
         return True
 
     def readinto(self, b) -> int:
-        while not self._buf:
+        while self._pos == len(self._buf):
             nxt = next(self._it, None)
             if nxt is None:
                 return 0
-            self._buf = nxt
-        n = min(len(b), len(self._buf))
-        b[:n] = self._buf[:n]
-        self._buf = self._buf[n:]
+            self._buf, self._pos = memoryview(nxt), 0
+        n = min(len(b), len(self._buf) - self._pos)
+        b[:n] = self._buf[self._pos : self._pos + n]
+        self._pos += n
         return n
 
 

@@ -6,8 +6,10 @@ checked against the pure-Python replay spec; manifest anti-join.
 from __future__ import annotations
 
 import bz2
+import datetime as dt
 import os
 import pathlib
+from collections import Counter
 
 import pytest
 
@@ -19,7 +21,13 @@ from diachronic_spark.pipeline import (
 )
 from diachronic_spark.sources.manifest import files_df, files_to_run
 from diachronic_spark.sources.wiki_fixture import generate_rows
-from diachronic_spark.sources.wiki_xml import MEDIAWIKI_NS
+from diachronic_spark.sources.wiki_xml import (
+    MEDIAWIKI_NS,
+    _plan_bins,
+    parse_dump_files,
+    parse_dump_files_with_status,
+    split_parse_failures,
+)
 
 from .test_snapshot import _collect_sorted, _replay_all
 
@@ -176,12 +184,6 @@ def test_parse_with_status_logs_failures_and_continues(
     """The reference's per-file try/except + failure log
     (main.py:84-94, 103) as a relational channel: a corrupt file
     yields one failure row; good files parse fully."""
-    from diachronic_spark.sources.wiki_xml import (
-        parse_dump_files,
-        parse_dump_files_with_status,
-        split_parse_failures,
-    )
-
     rows, pa, pb = xml_paths
     bad = tmp_path / "corrupt.xml.bz2"
     bad.write_bytes(b"this is not bzip2 data")
@@ -195,6 +197,143 @@ def test_parse_with_status_logs_failures_and_continues(
     assert len(fail_rows) == 1
     assert fail_rows[0].src_path.endswith("corrupt.xml.bz2")
     assert fail_rows[0].error
+
+
+def _dump_rows(file_no: int, n_pages: int) -> list[tuple]:
+    """Three revisions a day apart for each of ``n_pages`` pages."""
+    base = dt.datetime(2001, 2, 1)
+    return [
+        (file_no * 1000 + p, seq, "0", f"F{file_no} P{p}",
+         base + dt.timedelta(days=seq, seconds=p), f"f{file_no} p{p} r{seq}")
+        for p in range(n_pages)
+        for seq in range(3)
+    ]
+
+
+@pytest.fixture(scope="module")
+def many_dumps(tmp_path_factory):
+    """12 dump files, more than the session's 8 cores; file 0 dominates
+    and every third file is bz2. Maps path -> revision count."""
+    d = tmp_path_factory.mktemp("many_dumps")
+    counts = {}
+    for i in range(12):
+        rows = _dump_rows(i, 150 if i == 0 else i + 1)
+        xml = rows_to_xml(rows).encode("utf-8")
+        if i % 3 == 2:
+            p = d / f"dump-{i:02d}.xml.bz2"
+            p.write_bytes(bz2.compress(xml))
+        else:
+            p = d / f"dump-{i:02d}.xml"
+            p.write_bytes(xml)
+        counts[str(p)] = len(rows)
+    return counts
+
+
+def _per_file_counts(parsed) -> dict:
+    return {
+        r["src_path"]: r["count"]
+        for r in parsed.groupBy("src_path").count().collect()
+    }
+
+
+def test_plan_bins_lpt(many_dumps):
+    """Largest-first into the lightest bin: every path lands in exactly
+    one bin, and the dominant file gets a bin to itself."""
+    paths = list(many_dumps)
+    dominant = max(paths, key=os.path.getsize)
+    for order in (paths, paths[::-1]):
+        bins = _plan_bins(order, 8)
+        assert len(bins) == 8
+        assert sorted(p for b in bins for p in b) == sorted(paths)
+        assert [dominant] in bins
+
+
+def test_plan_bins_unstatable_paths_round_robin():
+    paths = [f"/nonexistent/dump-{i}.xml.7z" for i in range(7)]
+    assert _plan_bins(paths, 3) == [
+        [paths[0], paths[3], paths[6]],
+        [paths[1], paths[4]],
+        [paths[2], paths[5]],
+    ]
+
+
+def test_parse_fan_out_is_one_wave_without_exchange(spark, many_dumps):
+    """One task per bin, min(len(paths), defaultParallelism) of them,
+    and no shuffle below the parse."""
+    paths = list(many_dumps)
+    cores = spark.sparkContext.defaultParallelism
+    for subset in (paths, paths[:2], paths[:1]):
+        parsed = parse_dump_files(spark, subset)
+        assert parsed.rdd.getNumPartitions() == min(len(subset), cores)
+        plan = parsed._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan
+        assert "Exchange" not in plan, plan
+
+
+def test_parse_fan_out_parses_every_path_once(spark, many_dumps):
+    paths = list(many_dumps)
+    assert _per_file_counts(parse_dump_files_with_status(spark, paths)) == many_dumps
+    assert parse_dump_files(spark, paths).count() == sum(many_dumps.values())
+
+
+def test_parse_fan_out_unstatable_paths_still_parse(
+    spark, many_dumps, monkeypatch
+):
+    """Paths the driver cannot stat weigh 0 in the bin planner; the
+    workers still open and parse them."""
+
+    def no_stat(path):
+        raise OSError(f"cannot stat {path}")
+
+    paths = list(many_dumps)
+    with monkeypatch.context() as m:
+        m.setattr(os.path, "getsize", no_stat)
+        parsed = parse_dump_files_with_status(spark, paths)
+    assert _per_file_counts(parsed) == many_dumps
+
+
+def test_parse_fan_out_matches_per_file_parse(spark, many_dumps, xml_paths):
+    """Binning files together changes no revision row: the batch parse
+    equals the union of one parse per file."""
+    paths = list(many_dumps) + list(xml_paths[1:])
+    together = Counter(map(tuple, parse_dump_files(spark, paths).collect()))
+    one_by_one = Counter(
+        tuple(r) for p in paths for r in parse_dump_files(spark, [p]).collect()
+    )
+    assert together == one_by_one
+
+
+def test_parse_with_status_truncated_file_is_all_or_nothing(
+    spark, many_dumps, tmp_path
+):
+    """A file that breaks after some revisions parsed still yields one
+    error row and none of its revisions, whatever bin it shares."""
+    src = next(p for p in many_dumps if p.endswith("dump-00.xml"))
+    cut = tmp_path / "truncated.xml"
+    xml = pathlib.Path(src).read_bytes()
+    cut.write_bytes(xml[: len(xml) // 2])
+    paths = list(many_dumps) + [str(cut)]
+    revisions, failures = split_parse_failures(
+        parse_dump_files_with_status(spark, paths)
+    )
+    assert revisions.count() == sum(many_dumps.values())
+    assert [r.src_path for r in failures.collect()] == [str(cut)]
+
+
+def test_strict_parse_batches_across_files(spark, many_dumps):
+    """With an Arrow batch size far below a file's revision count (and
+    not dividing it), the strict parse still emits every row once."""
+    paths = list(many_dumps)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = parse_dump_files(spark, paths)
+    finally:
+        spark.conf.set(key, old)
+    assert Counter(map(tuple, small.collect())) == Counter(
+        map(tuple, parse_dump_files(spark, paths).collect())
+    )
 
 
 def test_pipeline_config_from_yaml(tmp_path):
